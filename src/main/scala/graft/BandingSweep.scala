@@ -27,92 +27,16 @@ import org.apache.spark.sql.functions._
   * CLI, not a query path — correctness still gates on the driver
   * fixtures, where the default config measures recall 1.0.
   *
-  * Usage: tools/run.sh graft.BandingSweep [nDocs]  (default 50520)
+  * Usage: [SPARK_GRAFT_CPUS=32] tools/run.sh graft.BandingSweep [nDocs]  (default 50520)
   */
 object BandingSweep {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 50520L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bandingsweep")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Same whole-run contamination watermark as Bench/ScaleBench:
-    // loadavg + foreign user-cpu max + HYPERVISOR STEAL max over 15 s
-    // windows. Steal (/proc/stat cpu field 8) is the channel the
-    // round-11 incident proved invisible to every in-guest metric —
-    // a sweep record without it could be steal-contaminated while
-    // flagged clean, so it gates `contended` here exactly like in
-    // Bench (either signal > 0.5 cores sustained).
-    def loadAvg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    def cpuJiffies(): (Long, Long, Long) =
-      try {
-        val stat = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().trim.split("\\s+")
-        val self = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-        (stat(1).toLong + stat(2).toLong, self(13).toLong, stat(8).toLong)
-      } catch { case _: Throwable => (-1L, -1L, -1L) }
-    val loadStart = loadAvg()
-    val loadMax = new java.util.concurrent.atomic.AtomicReference[Double](loadStart)
-    val foreignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val stealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    locally {
-      val t = new Thread(() => {
-        var prev = cpuJiffies(); var prevT = System.nanoTime()
-        while (true) {
-          Thread.sleep(15000)
-          loadMax.updateAndGet(m => math.max(m, loadAvg()))
-          val cur = cpuJiffies(); val curT = System.nanoTime()
-          if (prev._1 >= 0 && cur._1 >= 0) {
-            val dt = (curT - prevT) / 1e9
-            val foreign =
-              ((cur._1 - prev._1) - (cur._2 - prev._2)) / 100.0 / math.max(dt, 1e-3)
-            foreignMax.updateAndGet(m => math.max(m, foreign))
-            if (prev._3 >= 0 && cur._3 >= 0)
-              stealMax.updateAndGet(m => math.max(m,
-                (cur._3 - prev._3) / 100.0 / math.max(dt, 1e-3)))
-          }
-          prev = cur; prevT = curT
-        }
-      }, "banding-load-sampler")
-      t.setDaemon(true); t.start()
-    }
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def shuffleSnap(): Long = { Thread.sleep(150); shuffleBytes.get() }
+    val spark = GraftSession.local(GraftSession.cpus)
+    // The whole-run contamination watermark Bench/ScaleBench use.
+    val load = new HostLoad.Watermark("banding-load-sampler")
+    val stageCounters = new StageCounters(spark)
+    def shuffleSnap(): Long = { Thread.sleep(150); stageCounters.shuffleBytes }
 
     val dir = s"/tmp/graft_zipf_bands_$nDocs"
     ScaleBench.zipfCorpusMultiJ(spark, dir, nDocs)
@@ -173,12 +97,13 @@ object BandingSweep {
       s""""${b}x$r":{"candidates":$nCand,"wall_s":${fmt(wall)},""" +
         s""""shuffle_mb":${fmt(shMb)},${perBucket.mkString(",")}}"""
     }
+    val contended = load.contended
     val json =
       s"""{"corpus":"$dir","docs":$nDocs,"twin_every":31,"rates_pct":[2,4,6],""" +
-        s""""load":{"start":${fmt(loadStart)},"max":${fmt(loadMax.get())},""" +
-        s""""end":${fmt(loadAvg())},"foreign_cores_max":${fmt(foreignMax.get())},""" +
-        s""""steal_cores_max":${fmt(stealMax.get())},""" +
-        s""""contended":${foreignMax.get() > 0.5 || stealMax.get() > 0.5}},""" +
+        s""""load":{"start":${fmt(load.loadStart)},"max":${fmt(load.loadMax.get())},""" +
+        s""""end":${fmt(HostLoad.loadAvg())},"foreign_cores_max":${fmt(load.foreignMax.get())},""" +
+        s""""steal_cores_max":${fmt(load.stealMax.get())},""" +
+        s""""contended":$contended},""" +
         s""""configs":{${rows.mkString(",")}}}"""
     // Contended-clobber guard, shared with Bench/ScaleBench (round-12
     // verdict #4): a contended sweep diverts rather than replacing a
@@ -190,11 +115,10 @@ object BandingSweep {
     // back-to-back with no untimed gaps worth excluding, and a
     // single conservative gate errs toward diverting — never toward
     // blessing a dirty record.
-    val contended = foreignMax.get() > 0.5 || stealMax.get() > 0.5
     val target = Bench.recordTarget("BANDING.json", contended)
     if (target != "BANDING.json")
       System.err.println(s"[banding] contended record (foreign " +
-        f"${foreignMax.get()}%.2f / steal ${stealMax.get()}%.2f cores) " +
+        f"${load.foreignMax.get()}%.2f / steal ${load.stealMax.get()}%.2f cores) " +
         s"would clobber the idle reference at BANDING.json — diverted to $target")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(target), json.getBytes("UTF-8"))

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, GraftSqlAccess, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlAccess}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 
 /** Per-round benchmark: times every registered query at
@@ -19,6 +19,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Sort
   * with that top-level presentation Sort stripped — the number that
   * tracks the OPERATOR's cost round-over-round (a 600k-row global sort
   * is harness artifact, not operator work).
+  * Usage: SPARK_GRAFT_SF_DIR=<sf> [SPARK_GRAFT_CPUS=32] tools/run.sh graft.Bench
   */
 object Bench {
 
@@ -32,109 +33,6 @@ object Bench {
         Some(GraftSqlAccess.ofRows(df.sparkSession, s.child))
       case _ => None
     }
-
-  /** 1-minute load average from /proc, -1 where unavailable. Sampled
-    * CONTINUOUSLY through the run (every 15 s, daemon thread), not
-    * just at the endpoints: round 9's record read `contended: false`
-    * from two idle endpoints while a co-scheduled driver gate
-    * mid-run inflated individual queries 5–12× — an endpoint flag
-    * BLESSES a contaminated record, which is worse than no flag.
-    */
-  private def loadAvg(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-      .split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** (total USER+NICE jiffies across all cpus, THIS process's utime,
-    * total SYSTEM jiffies, THIS process's stime) — the pairs whose
-    * per-interval deltas isolate OTHER processes' CPU.
-    * Raw loadavg cannot decide `contended`: a 32-core bench raises its
-    * OWN 1-min load past any fixed bar (max>1.0 would flag every
-    * honest record contended — a permanent false positive), while the
-    * co-scheduled-gate case round 9 exposed needs a mid-run signal.
-    * `max((Δtotal − Δself)/Δt)` over 15 s windows is that signal:
-    * self-load cancels exactly (Spark local mode is one process), and
-    * a concurrent sbt/driver gate shows as whole foreign cores.
-    * The DECIDING signal is USER time only, deliberately: kernel
-    * writeback of this bench's OWN shuffle/artifact files runs in
-    * kworker threads whose SYSTEM time would read as ~1 foreign core
-    * on every write-heavy family (measured: sql 1.25, llm 1.05 on an
-    * otherwise-idle host) — the contamination class that matters
-    * (another JVM: sbt, a driver gate, a second bench) is
-    * user-cpu-dominated. The SYSTEM pair is carried as an ADVISORY
-    * field only (`foreign_sys_cores_max`): a foreign rsync/backup is
-    * system-time-dominated and would slip the user-cpu bar, but the
-    * kworker allowance means the sys signal cannot gate `contended`
-    * without permanently false-positive-ing write-heavy families —
-    * so `contended:false` covers user-cpu-dominated co-processes and
-    * the record schema says so.
-    */
-  private def cpuJiffies(): (Long, Long, Long, Long) =
-    try {
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().trim.split("\\s+")
-      // cpu user nice system idle iowait irq softirq steal ...
-      val userTotal = stat(1).toLong + stat(2).toLong
-      val sysTotal = stat(3).toLong
-      val self = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      // fields 14/15 (1-based): utime/stime — after comm, which is
-      // parenthesized and contains no spaces for plain `java`.
-      (userTotal, self(13).toLong, sysTotal, self(14).toLong)
-    } catch { case _: Throwable => (-1L, -1L, -1L, -1L) }
-
-  /** (this process's MAJOR page faults, this process's storage-layer
-    * read bytes) — the per-entry I/O-pressure pair (round-10 verdict
-    * #1): a query that reads far over its committed idle time under
-    * `contended:false` needs a signal that names the cause, and
-    * foreign USER cpu misses page-cache eviction by a co-resident
-    * process (the suspected `_build_neardup_pairs` 52.9-vs-9.0 s
-    * mechanism — the gate's DuckDB/dataset work evicts the fixture
-    * from cache, this JVM then pays real disk reads it normally
-    * never does). majflt counts mapped-page misses that hit storage;
-    * /proc/self/io read_bytes counts ALL bytes fetched from the
-    * storage layer (a warm run reads ~0 — everything is page cache).
-    * Either spiking on an outlier entry names I/O pressure as the
-    * contaminant; both flat says the slowdown was CPU-side.
-    */
-  private def ioStat(): (Long, Long) =
-    try {
-      val st = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      val majflt = st(11).toLong // field 12 (1-based)
-      val rb = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/io")), "UTF-8")
-        .linesIterator.collectFirst {
-          case l if l.startsWith("read_bytes:") =>
-            l.substring("read_bytes:".length).trim.toLong
-        }.getOrElse(-1L)
-      (majflt, rb)
-    } catch { case _: Throwable => (-1L, -1L) }
-
-  /** (this process's block-I/O delay ticks, host STEAL jiffies) — the
-    * two contamination channels the first probe trio is blind to,
-    * exposed by a measured incident: a build-family record taken
-    * minutes after a 60 GB shuffle-spill run read uniformly ~2× slow
-    * with foreign-user ≈ 0, majflt = 0, read_mb ≈ 0 — neither a
-    * co-process nor cache eviction. delayacct_blkio_ticks
-    * (/proc/self/stat field 42) counts time THIS process sat blocked
-    * on block I/O — residual writeback throttling shows here and
-    * nowhere else; steal (/proc/stat cpu field 8) counts cycles the
-    * HYPERVISOR withheld — host-side co-tenancy on this virtualized
-    * box, invisible to every in-guest load metric.
-    */
-  private def stallStat(): (Long, Long) =
-    try {
-      val st = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-      val blkio = st(41).toLong // field 42 (1-based): delayacct_blkio_ticks
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().trim.split("\\s+")
-      (blkio, stat(8).toLong)
-    } catch { case _: Throwable => (-1L, -1L) }
 
   /** queries_op map of the committed idle record (BENCH_LOCAL.json),
     * used to flag mid-run-contaminated outliers for a rerun — absent
@@ -175,7 +73,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val cores = Runtime.getRuntime.availableProcessors()
     // Bounded wait-for-idle (round-8 verdict #5): every driver-tail
     // record to date was taken on a contended host and is noise for
@@ -185,147 +82,35 @@ object Bench {
     // starts loaded self-identifies via `contended: true` below.
     locally {
       val deadline = System.currentTimeMillis() + 10 * 60 * 1000L
-      var l = loadAvg()
+      var l = HostLoad.loadAvg()
       while (l > 1.0 && System.currentTimeMillis() < deadline) {
         System.err.println(f"[bench] host 1-min load $l%.2f — waiting for idle " +
           f"(bounded, ${(deadline - System.currentTimeMillis()) / 1000}s left)")
         Thread.sleep(15000)
-        l = loadAvg()
+        l = HostLoad.loadAvg()
       }
     }
-    val loadStart = loadAvg()
-    // Whole-run watermarks (see loadAvg/cpuJiffies scaladocs): every
-    // 15 s sample, not the endpoints, decides `contended` — and the
-    // deciding signal is FOREIGN cpu (Δtotal − Δself), because the
-    // bench's own 32-core work dominates raw loadavg.
-    val loadMax = new java.util.concurrent.atomic.AtomicReference[Double](loadStart)
-    val foreignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val foreignSysMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val stealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    locally {
-      val t = new Thread(() => {
-        var prev = cpuJiffies()
-        var prevSteal = stallStat()._2
-        var prevT = System.nanoTime()
-        while (true) {
-          Thread.sleep(15000)
-          loadMax.updateAndGet(m => math.max(m, loadAvg()))
-          val cur = cpuJiffies()
-          val curSteal = stallStat()._2
-          val curT = System.nanoTime()
-          // Hypervisor steal per 15 s window (see stallStat scaladoc):
-          // host-side co-tenancy withheld these cycles from the WHOLE
-          // guest — invisible to loadavg, foreign-cpu, majflt and
-          // read-bytes alike (measured: a build-family record read
-          // uniformly ~2× slow with every in-guest signal clean and
-          // steal_cores 3.7 on the slow entry). It gates `contended`
-          // below exactly like foreign user-cpu: stolen cores ARE a
-          // co-process, just one scheduled by the host.
-          if (prevSteal >= 0 && curSteal >= 0) {
-            val dt = (curT - prevT) / 1e9
-            stealMax.updateAndGet(m => math.max(m,
-              (curSteal - prevSteal) / 100.0 / math.max(dt, 1e-3)))
-          }
-          prevSteal = curSteal
-          if (prev._1 >= 0 && cur._1 >= 0) {
-            val dt = (curT - prevT) / 1e9
-            // jiffies are USER_HZ=100/s: foreign cores busy over the
-            // window = (Δtotal − Δself)/100/Δt.
-            val foreign =
-              ((cur._1 - prev._1) - (cur._2 - prev._2)) / 100.0 / math.max(dt, 1e-3)
-            foreignMax.updateAndGet(m => math.max(m, foreign))
-            // Advisory only (see cpuJiffies scaladoc): foreign SYSTEM
-            // time, which includes kworker writeback of this bench's
-            // own files — it cannot gate `contended`, but a
-            // sys-dominated co-process (rsync, compression) shows
-            // here when the user-cpu flag reads clean.
-            val foreignSys =
-              ((cur._3 - prev._3) - (cur._4 - prev._4)) / 100.0 / math.max(dt, 1e-3)
-            foreignSysMax.updateAndGet(m => math.max(m, foreignSys))
-          }
-          prev = cur
-          prevT = curT
-        }
-      }, "bench-load-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
-    if (loadStart > 0.5 * cores)
-      System.err.println(f"[bench] WARNING: host 1-min load $loadStart%.1f exceeds " +
+    // Whole-run watermarks (see HostLoad): every 15 s sample, not the
+    // endpoints, decides `contended` — and the deciding signal is
+    // FOREIGN cpu (Δtotal − Δself), because the bench's own 32-core
+    // work dominates raw loadavg.
+    val load = new HostLoad.Watermark("bench-load-sampler")
+    if (load.loadStart > 0.5 * cores)
+      System.err.println(f"[bench] WARNING: host 1-min load ${load.loadStart}%.1f exceeds " +
         f"half of $cores cores at start — this record is contention-distorted; " +
         "re-run on an idle host before comparing per-query numbers")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Local small-SF stand-in for cluster file parallelism: the
-      // fixture files are a few MB, far below the 128m default, so
-      // every scan would be ONE partition and per-row compute would
-      // single-thread. At real scale (multi-GB files) the default is
-      // correct and this override is harmless.
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // FAIR scheduling so the concurrent multi-table import bench
-      // shares executor slots across per-table pools instead of FIFO
-      // head-of-line blocking behind the biggest table.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // Shuffle-volume accounting: bytes written to shuffle per query is
     // the scale-limiting quantity (network at 1000 executors) — worth
     // reporting next to seconds.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
+    val stageCounters = new StageCounters(spark)
     val shuffleByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
     var lastShuffleSnap = 0L
 
     def snapShuffle(name: String): Unit = {
       Thread.sleep(150) // let async listener events drain
-      val snap = shuffleBytes.get()
+      val snap = stageCounters.shuffleBytes
       shuffleByQuery(name) = snap - lastShuffleSnap
       lastShuffleSnap = snap
     }
@@ -340,24 +125,13 @@ object Bench {
     // whole-run `contended` flag structurally misses) instead of
     // waiting a round for a manual adjudication. A few /proc reads
     // per entry; nothing on the data path.
-    case class EntryProbe(foreign: Double, majflt: Long, readMb: Double,
-                          ioWaitS: Double, stealCores: Double)
-    val probes = scala.collection.mutable.LinkedHashMap[String, EntryProbe]()
+    val probes = scala.collection.mutable.LinkedHashMap[String, HostLoad.Window]()
     def probed[T](name: String)(body: => T): T = {
-      val j0 = cpuJiffies(); val io0 = ioStat(); val s0 = stallStat()
+      val h0 = HostLoad.snapshot()
       val t0 = System.nanoTime()
       val r = body
       val dt = (System.nanoTime() - t0) / 1e9
-      val j1 = cpuJiffies(); val io1 = ioStat(); val s1 = stallStat()
-      val foreign =
-        if (j0._1 < 0 || j1._1 < 0) -1.0
-        else ((j1._1 - j0._1) - (j1._2 - j0._2)) / 100.0 / math.max(dt, 1e-3)
-      probes(name) = EntryProbe(foreign,
-        if (io0._1 < 0) -1L else io1._1 - io0._1,
-        if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6,
-        if (s0._1 < 0) -1.0 else (s1._1 - s0._1) / 100.0,
-        if (s0._2 < 0) -1.0
-        else (s1._2 - s0._2) / 100.0 / math.max(dt, 1e-3))
+      probes(name) = HostLoad.window(h0, HostLoad.snapshot(), dt)
       r
     }
 
@@ -416,7 +190,7 @@ object Bench {
       // stripped run's shuffle doesn't leak into the NEXT query.
       Pins.release(spark)
       Thread.sleep(150)
-      lastShuffleSnap = shuffleBytes.get()
+      lastShuffleSnap = stageCounters.shuffleBytes
       (full, op)
     }
 
@@ -594,7 +368,7 @@ object Bench {
       val store = new etl.IndexStore(spark, out)
       val li = Tables(spark, sfDir, "lineitem")
       val t0 = System.nanoTime()
-      val n = store.bulkImport(li, "lineitem", "l_orderkey", numShards = cpus.toInt)
+      val n = store.bulkImport(li, "lineitem", "l_orderkey", numShards = GraftSession.cpus)
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] bulk_import: $n rows in $dt%.2fs (${n / dt}%.0f rows/s)")
       Pins.release(spark)
@@ -847,10 +621,10 @@ object Bench {
       specialResults.flatMap(_._2).map { case (n, s) => n -> ((s, s)) }
 
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
-    val qs = results.map { case (k, (full, _)) => s""""$k":${fmt(full)}""" }.mkString("{", ",", "}")
-    val qsOp = results.map { case (k, (_, op)) => s""""$k":${fmt(op)}""" }.mkString("{", ",", "}")
+    val qs = results.map { case (k, (full, _)) => s"${Verify.q(k)}:${fmt(full)}" }.mkString("{", ",", "}")
+    val qsOp = results.map { case (k, (_, op)) => s"${Verify.q(k)}:${fmt(op)}" }.mkString("{", ",", "}")
     val sh = shuffleByQuery
-      .map { case (k, v) => s""""$k":${fmt(v / 1e6)}""" }
+      .map { case (k, v) => s"${Verify.q(k)}:${fmt(v / 1e6)}" }
       .mkString("{", ",", "}")
     // Percentile pseudo-entries stay first-class in `queries` but are
     // excluded from the headline sums — they are percentiles of batch
@@ -860,7 +634,7 @@ object Bench {
     val summed = results.filterNot(_._1.startsWith("_stream_latency_p"))
     val total = summed.map(_._2._1).filter(_ >= 0).sum
     val totalOp = summed.map(_._2._2).filter(_ >= 0).sum
-    val loadEnd = loadAvg()
+    val loadEnd = HostLoad.loadAvg()
     // `contended` rides on BOTH emissions: a driver-tail record taken
     // on a loaded host self-identifies, so a per-query regression in a
     // contended record is inadmissible without an idle re-measure
@@ -870,21 +644,21 @@ object Bench {
     // reads FOREIGN cpu (other processes' cores, self-load cancelled):
     // >0.5 of a core sustained over any 15 s window while this bench
     // ran means some co-process was eating cycles mid-run.
-    val loadPeak = math.max(loadMax.get(), loadEnd)
-    val contended = foreignMax.get() > 0.5 || stealMax.get() > 0.5
-    // `foreign_sys_cores_max` is ADVISORY (see cpuJiffies scaladoc):
+    val loadPeak = math.max(load.loadMax.get(), loadEnd)
+    val contended = load.contended
+    // `foreign_sys_cores_max` is ADVISORY (see HostLoad.Jiffies):
     // it includes kworker writeback of this bench's own files, so it
     // cannot gate `contended` — but a sys-dominated co-process
     // (rsync/compression/backup) shows here when the user-cpu flag
     // reads clean. `rerun_skipped` counts >3×-over-reference entries
     // the guard deliberately did not rerun (each logged with its
     // reason on stderr), so `"reruns": []` is never ambiguous.
-    val loadJson = s"""{"start":${fmt(loadStart)},"end":${fmt(loadEnd)},""" +
-      s""""max":${fmt(loadPeak)},"foreign_cores_max":${fmt(foreignMax.get())},""" +
-      s""""foreign_sys_cores_max":${fmt(foreignSysMax.get())},""" +
-      s""""steal_cores_max":${fmt(stealMax.get())},""" +
+    val loadJson = s"""{"start":${fmt(load.loadStart)},"end":${fmt(loadEnd)},""" +
+      s""""max":${fmt(loadPeak)},"foreign_cores_max":${fmt(load.foreignMax.get())},""" +
+      s""""foreign_sys_cores_max":${fmt(load.foreignSysMax.get())},""" +
+      s""""steal_cores_max":${fmt(load.stealMax.get())},""" +
       s""""cores":$cores,"contended":$contended,"rerun_skipped":$rerunSkipped,""" +
-      rerunAll.map(n => s""""$n"""").mkString(""""reruns":[""", ",", "]}")
+      rerunAll.map(Verify.q).mkString(""""reruns":[""", ",", "]}")
     // Two emissions: the full record (per-query op times + shuffle) goes
     // to a committed file; stdout gets a LEAN driver-contract line —
     // round 1's full line was truncated by the driver's stdout capture,
@@ -895,15 +669,12 @@ object Bench {
     // delta. An outlier entry self-names its contaminant without a
     // round-trip adjudication.
     val probeJson = probes
-      .map { case (k, p) =>
-        s""""$k":{"foreign":${fmt(p.foreign)},"majflt":${p.majflt},""" +
-          s""""read_mb":${fmt(p.readMb)},"io_wait_s":${fmt(p.ioWaitS)},""" +
-          s""""steal_cores":${fmt(p.stealCores)}}""" }
+      .map { case (k, p) => s"${Verify.q(k)}:{${p.json}}" }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"queries_op":$qsOp,"shuffle_mb":$sh,"probe":$probeJson,"load":$loadJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"queries_op":$qsOp,"shuffle_mb":$sh,"probe":$probeJson,"load":$loadJson,"sf":${Verify.q(sfDir)}}"""
     val lean =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"load":$loadJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","total_op":${fmt(totalOp)},"queries":$qs,"load":$loadJson,"sf":${Verify.q(sfDir)}}"""
     // Subset runs are dev probes — don't clobber the committed full
     // record by DEFAULT; an explicit SPARK_GRAFT_BENCH_OUT target is
     // intentional (per-family isolated records, adjudication repeats)
@@ -927,7 +698,7 @@ object Bench {
       val target = recordTarget(asked, contended)
       if (target != asked)
         System.err.println(s"[bench] contended record (foreign " +
-          f"${foreignMax.get()}%.2f / steal ${stealMax.get()}%.2f cores) " +
+          f"${load.foreignMax.get()}%.2f / steal ${load.stealMax.get()}%.2f cores) " +
           s"would clobber the idle reference at $asked — diverted to $target")
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(target), full.getBytes("UTF-8"))
@@ -948,18 +719,18 @@ object Bench {
       if (n.startsWith("_")) "_" + n.stripPrefix("_").takeWhile(_ != '_')
       else n.takeWhile(_ != '_')
     val fams = summed.groupBy { case (k, _) => famOf(k) }.toSeq.sortBy(_._1)
-      .map { case (f, es) => s""""$f":${fmt(es.map(_._2._1).filter(_ >= 0).sum)}""" }
+      .map { case (f, es) => s"${Verify.q(f)}:${fmt(es.map(_._2._1).filter(_ >= 0).sum)}" }
       .mkString("{", ",", "}")
     val topQs = summed.sortBy(-_._2._1).take(24)
-      .map { case (k, (full, _)) => s""""$k":${fmt(full)}""" }
+      .map { case (k, (full, _)) => s"${Verify.q(k)}:${fmt(full)}" }
       .mkString("{", ",", "}")
-    val loadCompact = s"""{"steal_cores_max":${fmt(stealMax.get())},""" +
-      s""""foreign_cores_max":${fmt(foreignMax.get())},"contended":$contended,""" +
+    val loadCompact = s"""{"steal_cores_max":${fmt(load.stealMax.get())},""" +
+      s""""foreign_cores_max":${fmt(load.foreignMax.get())},"contended":$contended,""" +
       s""""rerun_skipped":$rerunSkipped}"""
     println(
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""total_op":${fmt(totalOp)},"n":${results.size},"families":$fams,""" +
-        s""""queries":$topQs,"load":$loadCompact,"sf":"$sfDir"}""")
+        s""""queries":$topQs,"load":$loadCompact,"sf":${Verify.q(sfDir)}}""")
     spark.stop()
   }
 }

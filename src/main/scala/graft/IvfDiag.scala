@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** IVF probe-vs-recall curve dump (round-9 verdict item #4): prints,
@@ -22,17 +21,13 @@ import org.apache.spark.sql.functions._
   *    (PQ/SQ8/binary/LSH) are the 10/10 path and measure it in RECALL.
   *
   * MEASUREMENT CLI, not a query path (Recall.scala's sibling).
-  * Usage: IvfDiag [sfDir]  — output lands in SCALE.md's curve table.
+  * Usage: [SPARK_GRAFT_CPUS=32] tools/run.sh graft.IvfDiag [sfDir] — output
+  * lands in SCALE.md's curve table.
   */
 object IvfDiag {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import llm.SimilarityQueries._
     val nList = 16

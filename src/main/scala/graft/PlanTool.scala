@@ -1,14 +1,27 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump formatted physical plans of the headline queries to
-  * one markdown file (committed as PLANS.md) — the plan-shape record
-  * backing COVERAGE.md's scale claims.
-  * Usage: tools/run.sh graft.PlanDump [outFile] [sfDir]
+/** Dev tool: plans and counters of registered queries, on a
+  * [[GraftSession]] so the shapes are the ones the bench runs. Cores come
+  * from SPARK_GRAFT_CPUS (PLANS.md is generated at SPARK_GRAFT_CPUS=4).
+  * Usage: tools/run.sh graft.PlanTool <mode> <sfDir> <args>, modes:
+  *  - `show <sfDir> <q1,q2,...> [outDir suffix]`: per query the formatted
+  *    INITIAL plan, a noop run, the post-AQE plan (AQE join promotions
+  *    are what several optimizations change) and a counters line; with
+  *    `outDir`, also `<outDir>/<query>_<suffix>.txt` (plans/rNN/ evidence).
+  *    No warm-up runs (it would shift expression ids): the first query's
+  *    wall and cpu include JVM start-up.
+  *  - `audit <sfDir>`: every query's #exchanges and CARTESIAN!/bnlj flags.
+  *  - `dump <sfDir> [outFile]`: the [[headline]] plans as markdown
+  *    (PLANS.md, backing COVERAGE.md's scale claims).
   */
-object PlanDump {
+object PlanTool {
+  private val Usage = "usage: PlanTool show <sfDir> <q1,q2,...> [outDir suffix]" +
+    " | audit <sfDir> | dump <sfDir> [outFile]"
+
   val headline: Seq[String] = Seq(
     "rel_q1_pricing_summary", "rel_join_star_revenue", "rel_asof_join",
     "rel_interval_join_bucketed", "rel_sort_limit_topk",
@@ -67,54 +80,73 @@ object PlanDump {
     "search_facets_cardinality", "rel_approx_agg")
 
   def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "PLANS.md"
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val mode = args.headOption.getOrElse("")
+    val rest = args.drop(1)
+    val arity = Map("show" -> Set(2, 4), "audit" -> Set(1), "dump" -> Set(1, 2))
+    if (!arity.get(mode).exists(_(rest.length))) {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
+    val sfDir = rest(0)
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    try mode match {
+      case "show" =>
+        val out = if (rest.length == 4) Some((rest(2), rest(3))) else None
+        show(spark, rest(1).split(",").toSeq, sfDir, out)
+      case "audit" => audit(spark, sfDir)
+      case "dump" => dump(spark, rest.lift(1).getOrElse("PLANS.md"), sfDir)
+    } finally spark.stop()
+  }
+
+  private def show(spark: SparkSession, names: Seq[String], sfDir: String,
+                   out: Option[(String, String)]): Unit = {
+    val counters = new StageCounters(spark)
+    out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
+    var before = counters.snap()
+    names.foreach { name =>
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val formatted = df.queryExecution.explainString(FormattedMode)
+      val t1 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t2 = System.nanoTime()
+      val post = df.queryExecution.executedPlan.toString
+      Pins.release(spark)
+      counters.drain()
+      val after = counters.snap()
+      val d = after.zip(before).map { case (a, b) => a - b }
+      before = after
+      val tag = out.fold("show")(_._2)
+      val txt = s"== $name ($tag, $sfDir, noop ${f"${(t2 - t1) / 1e9}%.2f"} s) ==\n\n" +
+        formatted + "\n\n== post-AQE executed plan ==\n\n" + post
+      out.foreach { case (dir, sfx) => Files.writeString(Paths.get(dir, s"${name}_$sfx.txt"), txt) }
+      println(txt)
+      println(f"[prof] $name%-32s wall=${(t2 - t0) / 1e9}%7.2f s  jobs=${d(0)}%3d  " +
+        f"stages=${d(1)}%4d  tasks=${d(2)}%6d  " +
+        f"cpu=${d(3) / 1e9}%7.2f s  shuffle=${d(4) / 1e6}%8.1f MB")
+    }
+  }
+
+  private def audit(spark: SparkSession, sfDir: String): Unit =
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      try {
+        val p = SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.executedPlan.toString
+        val exchanges = "Exchange".r.findAllIn(p).size
+        val flags = Seq(
+          Option.when(p.contains("CartesianProduct"))("CARTESIAN!"),
+          Option.when(p.contains("BroadcastNestedLoopJoin"))("bnlj")).flatten.mkString(",")
+        println(f"$name%-32s exchanges=$exchanges%-3d $flags")
+      } catch {
+        case e: Throwable => println(f"$name%-32s ERROR ${e.getMessage.take(80)}")
+      }
+    }
+
+  private def dump(spark: SparkSession, out: String, sfDir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at sf0.001 (plan shapes are\n")
+    sb.append("Generated by `graft.PlanTool dump` at sf0.001 (plan shapes are\n")
     sb.append("scale-invariant; AQE may further split/coalesce at runtime).\n")
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -132,6 +164,5 @@ object PlanDump {
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
   }
 }

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * from the perturbed text.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<base> SPARK_GRAFT_SCALE_FACTOR=10
-  *   tools/run.sh graft.ScaleBench
+  *   [SPARK_GRAFT_CPUS=32] [SPARK_GRAFT_IO_CODEC=lz4] tools/run.sh graft.ScaleBench
   * Writes the derived tables under /tmp/graft_scale_<factor>x (reused
   * across runs via a _READY marker) and one JSON line per run, plus
   * SCALE.json with the full detail.
@@ -305,64 +305,21 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaledDir = s"/tmp/graft_scale_${factor}x"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Broadcast discipline (scale safety): static auto-broadcast OFF —
-      // Catalyst's static size estimates for aggregate/cache-derived
-      // frames read tiny and would broadcast corpus-scale build sides
-      // (measured driver OOM at the 30x ScaleBench corpus); AQE promotes
-      // joins to broadcast only from ACTUAL runtime sizes. Explicit
-      // broadcast() on bounded frames is unaffected.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      // Partition discovery of cell-partitioned artifacts (up to 1024
-      // geo/IVF cell dirs) runs DRIVER-SIDE below this threshold: a
-      // 1024-task listing JOB costs ~1.7 s of pure task overhead per
-      // query CONSTRUCTION (measured, geo probe r8) vs ~50 ms of
-      // driver listStatus calls. Above ~8k dirs the distributed
-      // listing wins again - exactly Spark's intended use of the knob.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
-      // Shuffle-partition scaling: sizing for the FIXTURE (32) starves
-      // a 100x corpus - each of 32 partitions then carries 100x the
-      // rows and the sort/shuffle spills (measured: the substring
-      // finder's real 1.2 slope at 30->100x collapses to ~linear at
-      // 512 initial partitions, 154 -> 107 s at 100x). The
-      // scale-correct discipline is a HIGH initial count with AQE
-      // coalescing down to the data: small queries still run ~32
-      // effective partitions, big shuffles get the fan-out they need.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      // Shuffle/spill codec passthrough for the disk-bound witness
-      // decades (lz4 default — Spark's own): the 1000× substring
-      // witness's transient on-disk peak (shuffle files + sort spill
-      // coexisting) exceeds this sandbox's ~75 GB free even after the
-      // round-12 Bloom cut, and zstd halves it. RECORD HONESTY: the
-      // choice is stamped into the record (`io_codec`), and shuffle-MB
-      // figures are only comparable WITHIN one codec — every ratio in
-      // a record is base-vs-scaled of the same run, same codec, so
-      // slopes stay valid; cross-record byte comparisons must check
-      // the stamp.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Shuffle/spill codec passthrough for the disk-bound witness
+    // decades (lz4 default — Spark's own): the 1000× substring
+    // witness's transient on-disk peak (shuffle files + sort spill
+    // coexisting) exceeds the 32-core host's ~75 GB free disk even after the
+    // round-12 Bloom cut, and zstd halves it. RECORD HONESTY: the
+    // choice is stamped into the record (`io_codec`), and shuffle-MB
+    // figures are only comparable WITHIN one codec — every ratio in
+    // a record is base-vs-scaled of the same run, same codec, so
+    // slopes stay valid; cross-record byte comparisons must check
+    // the stamp.
+    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true",
+      "spark.io.compression.codec" -> ioCodec)
 
     // Controlled-probe mode (dev-only; the per-round records run the
     // full set once): SPARK_GRAFT_SCALE_ONLY=a,b limits the timed set,
@@ -381,62 +338,10 @@ object ScaleBench {
     // embeddings table, but its recall curve is measured separately
     // by IvfDiag, not timed here.
     // Whole-run load watermark (round-9 verdict #7 — the same
-    // continuous sampling + foreign-cpu discrimination Bench uses):
-    // the committed SCALE_*.json self-identifies when a co-scheduled
-    // process contaminated it. Foreign cpu = (Δtotal − Δself) jiffies
-    // per 15 s window — raw loadavg can't decide contention because a
-    // 32-core scale run raises its OWN load past any fixed bar.
-    def loadAvg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // USER time only — kernel writeback of the run's own shuffle files
-    // would otherwise read as ~1 foreign core (see Bench.cpuJiffies).
-    // (total user+nice jiffies, self utime, host STEAL jiffies) — steal
-    // counts cycles the hypervisor withheld from the whole guest:
-    // host-side co-tenancy invisible to loadavg/foreign-cpu (measured
-    // via Bench's per-entry probes: a clean-looking record ran under
-    // 3.7 stolen cores), so it gates `contended` exactly like foreign
-    // user-cpu.
-    def cpuJiffies(): (Long, Long, Long) =
-      try {
-        val stat = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-          .linesIterator.next().trim.split("\\s+")
-        val userTotal = stat(1).toLong + stat(2).toLong
-        val self = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-        (userTotal, self(13).toLong, stat(8).toLong)
-      } catch { case _: Throwable => (-1L, -1L, -1L) }
-    val loadStart = loadAvg()
-    val loadMax = new java.util.concurrent.atomic.AtomicReference[Double](loadStart)
-    val foreignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val stealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    locally {
-      val t = new Thread(() => {
-        var prev = cpuJiffies()
-        var prevT = System.nanoTime()
-        while (true) {
-          Thread.sleep(15000)
-          loadMax.updateAndGet(m => math.max(m, loadAvg()))
-          val cur = cpuJiffies()
-          val curT = System.nanoTime()
-          if (prev._1 >= 0 && cur._1 >= 0) {
-            val dt = (curT - prevT) / 1e9
-            val foreign =
-              ((cur._1 - prev._1) - (cur._2 - prev._2)) / 100.0 / math.max(dt, 1e-3)
-            foreignMax.updateAndGet(m => math.max(m, foreign))
-            stealMax.updateAndGet(m => math.max(m,
-              (cur._3 - prev._3) / 100.0 / math.max(dt, 1e-3)))
-          }
-          prev = cur
-          prevT = curT
-        }
-      }, "scale-load-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
+    // continuous sampling + foreign-cpu discrimination Bench uses, see
+    // HostLoad): the committed SCALE_*.json self-identifies when a
+    // co-scheduled process contaminated it.
+    val load = new HostLoad.Watermark("scale-load-sampler")
 
     val corpusMode = sys.env.getOrElse("SPARK_GRAFT_SCALE_CORPUS", "replica")
     // WITNESS mode (round-11 verdict #1): SPARK_GRAFT_SCALE_WITNESS=
@@ -547,7 +452,7 @@ object ScaleBench {
     // were measured on the same operator and corpus), while shuffle
     // BYTES measure the ALGORITHM: a linear operator's volume ratio
     // equals the data ratio regardless of how the JVM struggled.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val stageCounters = new StageCounters(spark)
     // Memory-envelope channels (round-11 verdict #6): the 1000×-class
     // runs are exactly where a single 32-core box runs out of executor
     // memory (the combined 5M-doc JVM died of memory exhaustion; a
@@ -566,11 +471,6 @@ object ScaleBench {
     val spillMemB = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
         override def onTaskEnd(
             te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val m = te.taskMetrics
@@ -581,7 +481,7 @@ object ScaleBench {
           }
         }
       })
-    def shuffleSnap(): Long = { Thread.sleep(150); shuffleBytes.get() }
+    def shuffleSnap(): Long = { Thread.sleep(150); stageCounters.shuffleBytes }
 
     // Per-operator contamination + memory probes (round-11 verdict
     // #5): SCALE records used to carry only whole-run watermarks, yet
@@ -590,24 +490,6 @@ object ScaleBench {
     // flag can't name it. Same per-window channels as Bench.probed
     // (foreign user-cpu avg, majflt delta, storage-read MB, blkio
     // wait, hypervisor steal) plus the memory envelope above.
-    def ioStat(): (Long, Long) =
-      try {
-        val st = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/stat")), "UTF-8").split(" ")
-        val majflt = st(11).toLong // field 12 (1-based)
-        val rb = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/self/io")), "UTF-8")
-          .linesIterator.collectFirst {
-            case l if l.startsWith("read_bytes:") =>
-              l.substring("read_bytes:".length).trim.toLong
-          }.getOrElse(-1L)
-        (majflt, rb)
-      } catch { case _: Throwable => (-1L, -1L) }
-    def blkioTicks(): Long =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
-        .split(" ")(41).toLong // field 42: delayacct_blkio_ticks
-      catch { case _: Throwable => -1L }
     def heapPools = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
@@ -625,7 +507,7 @@ object ScaleBench {
     // `contended_any_window` + the raw watermarks.
     val timedForeignMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
     val timedStealMax = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    def pfmt(d: Double) = "%.3f".formatLocal(java.util.Locale.US, d)
+    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.US, d)
     def probedRun[T](key: String)(body: => T): T = {
       // Listener events arrive on an async bus (the reason shuffleSnap
       // sleeps 150 ms): drain BEFORE the reset — a late onTaskEnd from
@@ -633,7 +515,7 @@ object ScaleBench {
       // misattributed here — and again before sampling at the end, so
       // this window's own tail events land in its counters.
       Thread.sleep(150)
-      val j0 = cpuJiffies(); val io0 = ioStat(); val b0 = blkioTicks()
+      val h0 = HostLoad.snapshot()
       taskPeakMem.set(0)
       val sd0 = spillDiskB.get(); val sm0 = spillMemB.get()
       heapPools.foreach(_.resetPeakUsage())
@@ -647,27 +529,17 @@ object ScaleBench {
       // inflates timed_foreign/steal and can spuriously divert a
       // record); the sleep below only guards the LISTENER-derived
       // counters (spill, taskPeakMem, shuffle).
-      val j1 = cpuJiffies(); val io1 = ioStat(); val b1 = blkioTicks()
+      val w = HostLoad.window(h0, HostLoad.snapshot(), dt)
       Thread.sleep(150)
-      val foreign =
-        if (j0._1 < 0 || j1._1 < 0) -1.0
-        else ((j1._1 - j0._1) - (j1._2 - j0._2)) / 100.0 / math.max(dt, 1e-3)
-      val steal =
-        if (j0._3 < 0 || j1._3 < 0) -1.0
-        else (j1._3 - j0._3) / 100.0 / math.max(dt, 1e-3)
       val heapMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
-      timedForeignMax.updateAndGet(m => math.max(m, foreign))
-      timedStealMax.updateAndGet(m => math.max(m, steal))
+      timedForeignMax.updateAndGet(m => math.max(m, w.foreign))
+      timedStealMax.updateAndGet(m => math.max(m, w.stealCores))
       val json =
-        s"""{"foreign":${pfmt(foreign)},""" +
-          s""""majflt":${if (io0._1 < 0) -1L else io1._1 - io0._1},""" +
-          s""""read_mb":${pfmt(if (io0._2 < 0) -1.0 else (io1._2 - io0._2) / 1e6)},""" +
-          s""""io_wait_s":${pfmt(if (b0 < 0) -1.0 else (b1 - b0) / 100.0)},""" +
-          s""""steal_cores":${pfmt(steal)},""" +
-          s""""peak_task_mem_mb":${pfmt(taskPeakMem.get() / 1e6)},""" +
-          s""""peak_heap_mb":${pfmt(heapMb)},""" +
-          s""""spilled_mem_mb":${pfmt((spillMemB.get() - sm0) / 1e6)},""" +
-          s""""spilled_disk_mb":${pfmt((spillDiskB.get() - sd0) / 1e6)}}"""
+        s"""{${w.json},""" +
+          s""""peak_task_mem_mb":${fmt(taskPeakMem.get() / 1e6)},""" +
+          s""""peak_heap_mb":${fmt(heapMb)},""" +
+          s""""spilled_mem_mb":${fmt((spillMemB.get() - sm0) / 1e6)},""" +
+          s""""spilled_disk_mb":${fmt((spillDiskB.get() - sd0) / 1e6)}}"""
       probeLog.getOrElseUpdate(key,
         scala.collection.mutable.ArrayBuffer[String]()) += json
       r
@@ -759,7 +631,6 @@ object ScaleBench {
     val base = runAll(baseDirEff, "base").toMap
     val scaled = runAll(scaledDirEff, "scaled").toMap
 
-    def fmt(d: Double) = "%.3f".formatLocal(java.util.Locale.US, d)
     val rows = base.keys.toSeq.sorted.map { n =>
       // Ratio of MINIMA when repeats were asked for: the minimum is
       // the standard noise-floor estimator — transient host I/O only
@@ -780,20 +651,20 @@ object ScaleBench {
           s""","scaled_runs":[${sT.map(fmt).mkString(",")}]"""
       s""""$n":{"base_s":${fmt(bT.min)},"scaled_s":${fmt(sT.min)},"ratio":${fmt(r)}$shJson$runsJson}"""
     }
-    val loadEnd = loadAvg()
+    val loadEnd = HostLoad.loadAvg()
     // `contended` = a TIMED window absorbed foreign cpu or steal (the
     // per-operator probes' own watermark — see the probeLog comment);
     // `contendedAnyWindow` = the old whole-run view, still published.
     val contended = timedForeignMax.get() > 0.5 || timedStealMax.get() > 0.5
-    val contendedAnyWindow = foreignMax.get() > 0.5 || stealMax.get() > 0.5
+    val contendedAnyWindow = load.contended
     val json =
       s"""{"base":"$baseDirEff","base_docs":$nBase,"factor":$factor,""" +
         s""""corpus":"$corpusMode","scaled_docs":$nScaled,"repeat":$repeat,""" +
-        s""""io_codec":"${sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")}",""" +
+        s""""io_codec":"$ioCodec",""" +
         s""""heap_max_mb":$heapMaxMb,""" +
-        s""""load":{"start":${fmt(loadStart)},"max":${fmt(loadMax.get())},""" +
-        s""""end":${fmt(loadEnd)},"foreign_cores_max":${fmt(foreignMax.get())},""" +
-        s""""steal_cores_max":${fmt(stealMax.get())},""" +
+        s""""load":{"start":${fmt(load.loadStart)},"max":${fmt(load.loadMax.get())},""" +
+        s""""end":${fmt(loadEnd)},"foreign_cores_max":${fmt(load.foreignMax.get())},""" +
+        s""""steal_cores_max":${fmt(load.stealMax.get())},""" +
         s""""timed_foreign_max":${fmt(timedForeignMax.get())},""" +
         s""""timed_steal_max":${fmt(timedStealMax.get())},""" +
         s""""contended":$contended,""" +

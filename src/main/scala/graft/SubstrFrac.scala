@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * sampling noise, and the S=1 census equals substringIslands' own
   * nEligible accounting.
   *
-  * Usage: tools/run.sh graft.SubstrFrac <corpusDir> [k] [cap] [S] [tag]
+  * Usage: [SPARK_GRAFT_IO_CODEC=zstd] tools/run.sh graft.SubstrFrac <corpusDir> [k] [cap] [S] [tag]
   * Prints one JSON line; appends to SUBSTRFRAC.jsonl when tag given.
   */
 object SubstrFrac {
@@ -40,31 +40,8 @@ object SubstrFrac {
     val cap = if (args.length > 2) args(2).toInt else llm.DedupQueries.MaxSpanGramDf
     val s0 = if (args.length > 3) args(3).toLong else 1L
     val tag = if (args.length > 4) Some(args(4)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-substrfrac")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
     // Mechanism decades past the join's reach need corpora ScaleBench
     // never ran: SPARK_GRAFT_GEN_ZIPF_DOCS=N generates the standard
     // Zipf witness corpus at `dir` first (same generator, _READY-gated

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-stage shuffle-byte attribution for the exact-substring pair
   * finder (round-12 verdict #2, final leg).
   *
@@ -15,37 +13,14 @@ import org.apache.spark.sql.SparkSession
   * written, and the first line of the stage's call-site details, so
   * the growing term is named instead of guessed.
   *
-  * Usage: tools/run.sh graft.SubstrStageBytes <corpusDir> [spanK]
+  * Usage: [SPARK_GRAFT_IO_CODEC=zstd] tools/run.sh graft.SubstrStageBytes <corpusDir> [spanK]
   */
 object SubstrStageBytes {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val k = if (args.length > 1) args(1).toInt else llm.DedupQueries.SpanK
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-substr-stagebytes")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      // Cached-plan builds go through AQE too (r14): the library's
-      // pinned frames (posting lists, candidate grams, LM type tables)
-      // are AGGREGATE outputs persisted for multiple consumers; with
-      // this off (the upstream default, kept for partitioning-stability
-      // conservatism) the cache materializes at the raw
-      // initialPartitionNum=512 and every consumer scan pays 512 tasks
-      // regardless of data size — measured 7x on the PMI unigram table
-      // at sf0.1. With it on, AQE coalesces the cache build exactly
-      // like any other shuffle, at every scale.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus,
+      "spark.io.compression.codec" -> sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

@@ -52,8 +52,8 @@ object Tables {
     * The ANN shortlist knobs (R = N/50) and quantizer-size knobs
     * (k = N/2000) need the corpus size N at plan-construction time.
     * A plain `df.count()` there runs a full count JOB during DataFrame
-    * construction — so plan-only consumers (PlanDump, Explain,
-    * PlanAudit) pay real scans, and every bench run pays one extra
+    * construction — so plan-only consumers (PlanTool's `dump` and
+    * `audit` modes) pay real scans, and every bench run pays one extra
     * scan per query. This instead compiles count(*) to
     * `PushedAggregation` on the DSv2 parquet scan (the
     * rel_agg_pushdown cloned-session pattern — own SQLConf, shared

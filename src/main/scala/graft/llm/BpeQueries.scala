@@ -164,7 +164,13 @@ object BpeQueries {
     */
   private[graft] def trainerEntryCheckpoint(s: SparkSession, dir: String): Boolean =
     Tables.rowCount(s, dir, "documents") >=
-      sys.env.getOrElse("SPARK_GRAFT_TRAINER_CKPT_MIN_DOCS", "100000").toLong
+      ckptMinDocs(sys.env.get("SPARK_GRAFT_TRAINER_CKPT_MIN_DOCS"))
+
+  /** The gate's row threshold: an integer, else 100000 — a malformed
+    * env value must not fail the three trainer queries.
+    */
+  private[graft] def ckptMinDocs(raw: Option[String]): Long =
+    raw.flatMap(_.trim.toLongOption).getOrElse(100000L)
 
   private val NMerges = 12
 
